@@ -60,11 +60,6 @@ def main() -> None:
         "--conf", action="append", default=[],
         help="extra spark conf k=v (repeatable) for A/B runs",
     )
-    ap.add_argument(
-        "--surrogate", action="store_true",
-        help="A/B the xxhash64 conv surrogate through filled/treated "
-        "(jobs.rollup_job.run_pipeline surrogate_key)",
-    )
     args = ap.parse_args()
 
     from jobs.rollup_job import run_pipeline
@@ -94,7 +89,7 @@ def main() -> None:
         summary = run_pipeline(
             spark, wd, n_convs=args.n_convs, seed=args.seed,
             mega_turns=args.mega_turns, chunked=True, stats="fast",
-            stage_hook=hook, surrogate_key=args.surrogate,
+            stage_hook=hook,
         )
     finally:
         shutil.rmtree(wd, ignore_errors=True)
@@ -104,7 +99,6 @@ def main() -> None:
     keys = ("inputBytes", "outputBytes", "shuffleReadBytes", "shuffleWriteBytes")
     out = {
         "codec": args.codec,
-        "surrogate": args.surrogate,
         "n_convs": args.n_convs,
         "turns": turns,
         "wall_sec": round(wall, 2),

@@ -23,32 +23,46 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
-from pyspark.sql import functions as F
-
 from pneuma_treatment_spark.compression.chunks import (
     TIER_WINDOW_DAYS,
     chunk_ttl_sql_predicate,
-    write_chunks,
 )
 from pneuma_treatment_spark.io.tableio import TableIO
-from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.retention import ttl_sql_predicate
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw_clustered,
     with_turn_metrics,
 )
-from pneuma_treatment_spark.operators.treatment import (
-    TreatmentConfig,
-    conv_anomaly_flags,
-    raw_anomaly_col,
-    treat_transcripts,
-)
+from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import PipelineRunner
+from pneuma_treatment_spark.plans.stages import (
+    TABLE_TS,
+    build_chunks,
+    build_filled,
+    build_treated,
+)
 from pneuma_treatment_spark.synth import generate_transcripts
 
 #: tier TTLs (days) — finer tiers age out first (retention cascade)
 DEFAULT_TTLS = {"1m": 90, "1h": 365, "1d": 3650}
+
+
+def check_shards(shard_index: int, shard_count: int, input_table: str | None) -> None:
+    """Reject shard arguments that cannot select one slice of the input:
+    an index outside ``[0, shard_count)``, or sharding an ``input_table``
+    (only the synthesized input is sharded — every shard would reprocess
+    the whole table into its own workdir)."""
+    if not 0 <= shard_index < shard_count:
+        raise ValueError(
+            f"shard_index={shard_index} is outside [0, shard_count={shard_count})"
+        )
+    if shard_count > 1 and input_table:
+        raise ValueError(
+            "input_table is not sharded: with shard_count > 1 every shard "
+            "would process the whole table — split the table and run each "
+            "part with shard_count=1"
+        )
 
 
 def run_pipeline(
@@ -67,25 +81,20 @@ def run_pipeline(
     shard_index: int = 0,
     shard_count: int = 1,
     stage_hook=None,
-    surrogate_key: bool = False,
     chunk_window_days: dict[str, int] | None = None,
 ) -> dict:
     """Run (or resume) the full pipeline; returns a stage→metrics summary.
 
     ``input_table``: optional path to an existing transcripts parquet table;
-    default synthesizes deterministically. ``stop_after``: stage name to halt
+    default synthesizes deterministically (shard ``shard_index`` of
+    ``shard_count`` synthesizes its slice of the ``n_convs`` conversations;
+    see :func:`check_shards`). ``stop_after``: stage name to halt
     after (used by the resume test to simulate a mid-job kill).
     ``stage_hook(name)``: called after each stage completes — the seam the
     bytes-per-stage instrumentation (BENCH/run_bytes.py) snapshots on.
-    ``surrogate_key``: route the filled/treated stages' shuffles through an
-    8-byte ``xxhash64(conv_id)`` surrogate instead of the conv_id string,
-    joining the string back from a per-conversation dim immediately before
-    each write — written table schemas are unchanged. A measured A/B lever
-    (BENCH/run_bytes.py --surrogate; adoption decision in
-    BENCH/BASELINE.md). The dim build fails fast on a hash collision
-    (probability ~n²/2⁶⁵ — negligible below billions of conversations;
-    past that, widen to a 128-bit surrogate).
+    What each derived table contains is defined in ``plans/stages.py``.
     """
+    check_shards(shard_index, shard_count, input_table)
     cfg = cfg or TreatmentConfig()
     windows = chunk_window_days or dict(TIER_WINDOW_DAYS)
     io = TableIO(spark, workdir, n_buckets=n_buckets)
@@ -117,7 +126,6 @@ def run_pipeline(
             # data and clobber overlapping p_day partitions)
             "shard_index": shard_index,
             "shard_count": shard_count,
-            "surrogate_key": surrogate_key,
         },
     )
 
@@ -125,14 +133,13 @@ def run_pipeline(
 
     def stage(name, build, **kw):
         order.append(name)
-        df = runner.run_stage(name, build, **kw)
+        df = runner.run_stage(name, build, ts_col=TABLE_TS[name], **kw)
         if stage_hook is not None:
             stage_hook(name)
         if stop_after == name:
             raise _StopPipeline(name)
         return df
 
-    _dim_cache: list = []  # persisted surrogate conv dim, released on exit
     try:
         first = shard_index * n_convs // shard_count
         cnt = (shard_index + 1) * n_convs // shard_count - first
@@ -147,104 +154,16 @@ def run_pipeline(
                 )
             ),
         )
-        if surrogate_key:
-            _sk = F.xxhash64("conv_id")
 
-            def conv_dim():
-                # (__sk, conv_id) — one row per conversation; built,
-                # collision-checked, and persisted ONCE (it is joined in
-                # both the filled and treated builds — rebuilding it per
-                # stage ran redundant distinct+count jobs inside exactly
-                # the stages the bytes A/B measures). Fails fast on a
-                # 64-bit collision (would silently merge two conversations).
-                if not _dim_cache:
-                    dim = ingest.select(
-                        _sk.alias("__sk"), "conv_id"
-                    ).distinct().persist()
-                    if dim.groupBy("__sk").count().where("count > 1").limit(1).count():
-                        raise RuntimeError(
-                            "xxhash64(conv_id) collision — widen the surrogate key"
-                        )
-                    _dim_cache.append(dim)
-                return _dim_cache[0]
-
-            def _restore(df):
-                # swap the surrogate back for the conv_id string just before
-                # the write; column order (and thus table schema) unchanged
-                cols = df.columns
-                return (
-                    df.withColumnRenamed("conv_id", "__sk")
-                    .join(conv_dim(), "__sk")
-                    .drop("__sk")
-                    .select(*cols)
-                )
-
-            def _with_sk(df, *cols):
-                return df.select(_sk.alias("conv_id"), *cols)
-        else:
-            def _restore(df):
-                return df
-
-            def _with_sk(df, *cols):
-                return df.select("conv_id", *cols)
-
-        # Gap-fill on the NARROW series only and join the payload columns
-        # back once: text/tool otherwise ride through the densify join plus
-        # two window sorts (~3x the bytes on this bandwidth-bound stage);
-        # the join-back moves them exactly once, and filled rows get null
-        # payloads either way. raw_anomaly rides along for free — the SQL
-        # mask reuses this stage's conv-partitioned windows — so the treated
-        # stage's conv_has_anomaly flags are a plain scan+aggregate instead
-        # of a full-frame window exchange (see treat_transcripts).
         def run_treatment_branch():
             filled = stage(
                 "filled",
-                lambda io: _restore(
-                    gap_fill(
-                        _with_sk(
-                            ingest, "turn_idx", "role", "ts", "token_count", "is_tool_call"
-                        ),
-                        lerp_cols=("token_count",),
-                        lerp_ts_cols=("ts",),
-                    ).join(
-                        _with_sk(ingest, "turn_idx", "text", "tool"),
-                        ["conv_id", "turn_idx"],
-                        "left",
-                    ).transform(
-                        # only the chunked treatment consumes the flags (the
-                        # non-chunked path computes conv_has_anomaly in-kernel)
-                        lambda d: d.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-                        if chunked
-                        else d
-                    )
-                ),
+                lambda io: build_filled(ingest, cfg, chunked),
                 deps=["ingest"],
-            )
-            # The kernels never read text/tool/role — shuttling payload or
-            # meta columns through the treatment's ~4 shuffle passes
-            # multiplies the stage's bytes. The treated table is a narrow
-            # metric series (measured: dropping `role` here cuts more
-            # shuffle bytes than dictionary-encoding it — ~20 B/row x 4
-            # passes — BENCH/BASELINE.md bytes table); text/tool/role live
-            # in `filled` and join back exactly on (conv_id, turn_idx) when
-            # needed. `ts` stays for the p_day write clustering; `is_filled`
-            # is load-bearing semantics.
-            narrow = _with_sk(filled, "turn_idx", "ts", "token_count", "is_filled")
-            # conv flags from the materialized filled table: map-side-combined
-            # aggregate over the stored raw_anomaly column — no window, no
-            # full-frame exchange, broadcast into the chunked stage-D join.
-            # A resumed pre-round-5 filled table has no raw_anomaly column:
-            # fall back to flags=None (treat_transcripts' slim pass).
-            flags = (
-                conv_anomaly_flags(_with_sk(filled, "raw_anomaly"))
-                if chunked and "raw_anomaly" in filled.columns
-                else None
             )
             stage(
                 "treated",
-                lambda io: _restore(
-                    treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
-                ),
+                lambda io: build_treated(filled, cfg, chunked),
                 deps=["filled"],
             )
 
@@ -257,40 +176,25 @@ def run_pipeline(
                 # the single-Exchange plan)
                 lambda io: rollup_raw_clustered(ingest, "1m", n_buckets=n_buckets),
                 deps=["ingest"],
-                ts_col="bucket_ts",
                 pre_clustered=True,
             )
             h1 = stage(
                 "rollup_1h",
                 lambda io: rollup_from_tier(m1, "1m", "1h"),
                 deps=["rollup_1m"],
-                ts_col="bucket_ts",
                 bucketed=False,  # coarse tier: day-only partitioning
             )
             d1 = stage(
                 "rollup_1d",
                 lambda io: rollup_from_tier(h1, "1h", "1d"),
                 deps=["rollup_1h"],
-                ts_col="bucket_ts",
                 bucketed=False,
             )
-            # chunk the INT partials only — rates re-derive exactly on read
-            # (compression/chunks.points_with_rates); full-entropy rate
-            # doubles barely XOR-compress while integer-valued doubles
-            # halve. Runs INSIDE this branch: chunks depends only on the
-            # tiers, so it must not wait for the treatment branch.
-            cols = [
-                "conv_id", "tier", "bucket_ts", "turn_count", "token_sum",
-                "tool_calls",
-            ]
+            # runs INSIDE this branch: chunks depends only on the tiers, so
+            # it must not wait for the treatment branch
             stage(
                 "chunks",
-                lambda io: write_chunks(
-                    m1.select(cols).unionByName(h1.select(cols)).unionByName(
-                        d1.select(cols)
-                    ),
-                    window_days=windows,
-                ),
+                lambda io: build_chunks(m1, h1, d1, windows),
                 deps=["rollup_1m", "rollup_1h", "rollup_1d"],
                 # (tier, window-start) dirs — the chunk TTL unit;
                 # write_chunks guarantees no chunk crosses a window, so
@@ -333,9 +237,6 @@ def run_pipeline(
                 )
     except _StopPipeline:
         pass
-    finally:
-        for d in _dim_cache:
-            d.unpersist()
 
     return {
         "stages": {
@@ -380,11 +281,6 @@ def main() -> None:
     ap.add_argument("--shard-index", type=int, default=0)
     ap.add_argument("--shard-count", type=int, default=1)
     ap.add_argument(
-        "--surrogate", action="store_true",
-        help="route filled/treated shuffles through an 8-byte xxhash64 "
-        "conv surrogate (A/B lever; see run_pipeline docstring)",
-    )
-    ap.add_argument(
         "--backfill-table", default=None,
         help="path to a parquet delta of late/corrected raw turns "
         "(conv_id, turn_idx, role, text, tool, ts); applies it through "
@@ -407,12 +303,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from pneuma_treatment_spark.session import get_spark
-
-    spark = get_spark(
-        "rollup-job", master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    # every argument check runs before the JVM starts (tens of seconds)
     if args.delete_convs and args.backfill_table:
         ap.error("--delete-convs and --backfill-table are separate ops — run them one at a time")
     if args.scrub_deadletter and not args.delete_convs:
@@ -421,11 +312,29 @@ def main() -> None:
             "would silently scrub nothing (the victims come from the "
             "delete set)"
         )
+    if args.delete_convs and args.shard_count != 1:
+        ap.error("--delete-convs: delete through the owning shard with --shard-count 1")
+    if args.backfill_table and args.shard_count != 1:
+        ap.error(
+            "--backfill-table does not compose with sharding: the delta "
+            "would upsert every conversation into THIS shard's tables, "
+            "duplicating conversations owned by other shards. Pre-filter "
+            "the delta to the owning shard and run with --shard-count 1."
+        )
+    try:
+        check_shards(args.shard_index, args.shard_count, args.input_table)
+    except ValueError as e:
+        ap.error(str(e))
+
+    from pneuma_treatment_spark.session import get_spark
+
+    spark = get_spark(
+        "rollup-job", master=f"local[{args.cpus}]", shuffle_partitions=args.cpus
+    )
+    spark.sparkContext.setLogLevel("ERROR")
     if args.delete_convs:
         from pneuma_treatment_spark.plans.backfill import delete_conversations
 
-        if args.shard_count != 1:
-            ap.error("--delete-convs: delete through the owning shard with --shard-count 1")
         t0 = time.perf_counter()
         summary = delete_conversations(
             spark,
@@ -440,13 +349,6 @@ def main() -> None:
     if args.backfill_table:
         from pneuma_treatment_spark.plans.backfill import backfill_pipeline
 
-        if args.shard_count != 1:
-            ap.error(
-                "--backfill-table does not compose with sharding: the delta "
-                "would upsert every conversation into THIS shard's tables, "
-                "duplicating conversations owned by other shards. Pre-filter "
-                "the delta to the owning shard and run with --shard-count 1."
-            )
         t0 = time.perf_counter()
         summary = backfill_pipeline(
             spark,
@@ -471,7 +373,6 @@ def main() -> None:
         stats=args.stats,
         shard_index=args.shard_index,
         shard_count=args.shard_count,
-        surrogate_key=args.surrogate,
     )
     if args.compact:
         io = TableIO(

@@ -40,11 +40,11 @@ also the crash-recovery story: a backfill killed between table merges is
 healed by re-running it (each per-table merge is independently
 idempotent).
 
-The recompute mirrors ``jobs/rollup_job.py:run_pipeline``'s stage builds
-(filled: `rollup_job.py:184-206`; treated: `rollup_job.py:207-232`;
-tiers/chunks: `rollup_job.py:233-270`) on the non-surrogate path; the
-anti-drift gate is ``tests/test_backfill.py``, which pins backfilled
-tables bit-equal to a from-scratch rebuild on the updated input.
+The recompute calls the same stage builders as
+``jobs/rollup_job.py:run_pipeline`` — ``plans/stages.py`` defines what
+the filled, treated and chunks tables contain, and the tier rollups are one
+``operators/rollup.py`` call each; ``tests/test_backfill.py`` pins
+backfilled tables bit-equal to a from-scratch rebuild on the updated input.
 """
 
 from __future__ import annotations
@@ -59,24 +59,21 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pneuma_treatment_spark.compression.chunks import write_chunks
 from pneuma_treatment_spark.io.tableio import TableIO
-from pneuma_treatment_spark.operators.gapfill import gap_fill
 from pneuma_treatment_spark.operators.rollup import (
     rollup_from_tier,
     rollup_raw,
     with_turn_metrics,
 )
-from pneuma_treatment_spark.operators.treatment import (
-    TreatmentConfig,
-    conv_anomaly_flags,
-    raw_anomaly_col,
-    treat_transcripts,
-)
+from pneuma_treatment_spark.operators.treatment import TreatmentConfig
 from pneuma_treatment_spark.plans.lineage import partition_counts
-
-#: chunked columns — must stay in lockstep with rollup_job.py's chunk stage
-_CHUNK_COLS = ["conv_id", "tier", "bucket_ts", "turn_count", "token_sum", "tool_calls"]
+from pneuma_treatment_spark.plans.stages import (
+    TABLE_TS,
+    build_chunks,
+    build_filled,
+    build_treated,
+    is_chunked,
+)
 
 #: the raw-transcript delta schema (input_hint shape) — extra columns are
 #: dropped so dead-letter sink dirs (which carry a batch_id partition level)
@@ -284,6 +281,32 @@ def _heal_asides(root: Path, pattern: str = ".aside.*") -> None:
             shutil.rmtree(str(aside), ignore_errors=True)
 
 
+def _merge_tables(io: TableIO, affected: DataFrame, new_rows) -> dict:
+    """:func:`merge_conv_scoped` ``new_rows(table)`` into every existing
+    pipeline table and keep its lineage green; returns per-table stats.
+
+    The table merges are independent (each rewrites only its own table; the
+    recomputes read persisted upstream frames, never the tables being
+    rewritten) — run them concurrently so the ops wall is max(table
+    merge), not the sum of ~30 driver-synchronous small jobs (backfill wall
+    is fixed-overhead-dominated at small deltas; concurrent jobs interleave
+    at task granularity even under the default FIFO scheduler, so idle
+    driver-sync gaps overlap other tables' work)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    jobs = [name for name in TABLE_TS if io.exists(name)]
+
+    def _one(name):
+        stats = merge_conv_scoped(io, name, new_rows(name), affected, ts_col=TABLE_TS[name])
+        _update_lineage(io, name, stats)
+        return name, {
+            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
+        }
+
+    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
+        return dict(ex.map(_one, jobs))
+
+
 def _manifest_config(workdir: str, stage: str) -> dict:
     """The raw config dict a stage's manifest recorded ({} when the
     manifest or the config predates recording)."""
@@ -390,12 +413,11 @@ def backfill_pipeline(
         affected.unpersist()
         return {"tables": {}, "affected_convs": 0}
 
-    filled_cols = io.read("filled").columns
+    # the filled table's layout records the treatment mode it was built in
+    built_chunked = is_chunked(io.read("filled"))
     if chunked is None:
-        # run_pipeline writes raw_anomaly into filled exactly when chunked
-        # (rollup_job.py:196-203) — the table layout records the mode
-        chunked = "raw_anomaly" in filled_cols
-    elif chunked != ("raw_anomaly" in filled_cols):
+        chunked = built_chunked
+    elif chunked != built_chunked:
         raise ValueError(
             "chunked flag contradicts the existing filled table layout "
             f"(raw_anomaly {'present' if not chunked else 'absent'})"
@@ -416,90 +438,26 @@ def backfill_pipeline(
     raw_aff.count()  # materialize BEFORE any table rewrite invalidates scans
 
     # --- recompute every stage for the affected conversations only --------
-    # (mirrors run_pipeline's builds — see module docstring for citations)
-    filled_new = gap_fill(
-        raw_aff.select(
-            "conv_id", "turn_idx", "role", "ts", "token_count", "is_tool_call"
-        ),
-        lerp_cols=("token_count",),
-        lerp_ts_cols=("ts",),
-    ).join(
-        raw_aff.select("conv_id", "turn_idx", "text", "tool"),
-        ["conv_id", "turn_idx"],
-        "left",
-    )
-    if chunked:
-        filled_new = filled_new.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-    filled_new = filled_new.persist()
-    narrow = filled_new.select("conv_id", "turn_idx", "ts", "token_count", "is_filled")
-    flags = (
-        conv_anomaly_flags(filled_new.select("conv_id", "raw_anomaly"))
-        if chunked
-        else None
-    )
-    treated_new = treat_transcripts(narrow, cfg, chunked=chunked, flags=flags)
+    # (run_pipeline's own builders — plans/stages.py)
+    filled_new = build_filled(raw_aff, cfg, chunked).persist()
     m1 = rollup_raw(raw_aff, "1m").persist()
     h1 = rollup_from_tier(m1, "1m", "1h").persist()
     d1 = rollup_from_tier(h1, "1h", "1d").persist()
-    chunks_new = write_chunks(
-        m1.select(_CHUNK_COLS)
-        .unionByName(h1.select(_CHUNK_COLS))
-        .unionByName(d1.select(_CHUNK_COLS)),
-        window_days=chunk_windows,
-    )
+    new_rows = {
+        "ingest": raw_aff,
+        "filled": filled_new,
+        "treated": build_treated(filled_new, cfg, chunked),
+        "rollup_1m": m1,
+        "rollup_1h": h1,
+        "rollup_1d": d1,
+        "chunks": build_chunks(m1, h1, d1, chunk_windows),
+    }
 
-    # --- partition-scoped merges + lineage upkeep --------------------------
-    # The seven table merges are independent (each rewrites only its own
-    # table; the recomputes read the persisted upstream frames, never the
-    # tables being rewritten) — run them concurrently so the ops wall is
-    # max(table merge), not the sum of ~30 driver-synchronous small jobs
-    # (backfill wall is fixed-overhead-dominated at small deltas; concurrent
-    # jobs interleave at task granularity even under the default FIFO
-    # scheduler, so idle driver-sync gaps overlap other tables' work).
-    jobs = [
-        (name, df, ts_col)
-        for name, df, ts_col in (
-            ("ingest", raw_aff, "ts"),
-            ("filled", filled_new, "ts"),
-            ("treated", treated_new, "ts"),
-            ("rollup_1m", m1, "bucket_ts"),
-            ("rollup_1h", h1, "bucket_ts"),
-            ("rollup_1d", d1, "bucket_ts"),
-            ("chunks", chunks_new, "start_ts"),
-        )
-        if io.exists(name)
-    ]
-
-    def _one(job):
-        name, df, ts_col = job
-        stats = merge_conv_scoped(io, name, df, affected, ts_col=ts_col)
-        _update_lineage(io, name, stats)
-        return name, {
-            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
-        }
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
-        tables = dict(ex.map(_one, jobs))
-
+    tables = _merge_tables(io, affected, new_rows.__getitem__)
     n_aff = affected.count()
     for p in (raw_aff, filled_new, m1, h1, d1, affected):
         p.unpersist()
     return {"tables": tables, "affected_convs": n_aff}
-
-
-#: per-table merge timestamp columns — the order backfill/delete walk the
-#: pipeline tables in (chunks uses start_ts: its p_day is the window START)
-_TABLE_TS = (
-    ("ingest", "ts"),
-    ("filled", "ts"),
-    ("treated", "ts"),
-    ("rollup_1m", "bucket_ts"),
-    ("rollup_1h", "bucket_ts"),
-    ("rollup_1d", "bucket_ts"),
-    ("chunks", "start_ts"),
-)
 
 
 def scrub_deadletter(spark: SparkSession, dead_path: str, convs: DataFrame) -> dict:
@@ -591,21 +549,7 @@ def delete_conversations(
         affected.unpersist()
         return {"tables": {}, "affected_convs": 0}
 
-    jobs = [(name, ts_col) for name, ts_col in _TABLE_TS if io.exists(name)]
-
-    def _one(job):
-        name, ts_col = job
-        empty = io.read(name).limit(0)
-        stats = merge_conv_scoped(io, name, empty, affected, ts_col=ts_col)
-        _update_lineage(io, name, stats)
-        return name, {
-            k: stats[k] for k in ("removed", "added", "parts_rewritten", "stale_dropped")
-        }
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, max(1, len(jobs)))) as ex:
-        tables = dict(ex.map(_one, jobs))
+    tables = _merge_tables(io, affected, lambda name: io.read(name).limit(0))
     scrubbed = {d: scrub_deadletter(spark, d, affected) for d in deadletter_dirs}
     affected.unpersist()
     out = {"tables": tables, "affected_convs": n_aff}

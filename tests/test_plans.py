@@ -208,47 +208,30 @@ def test_fan_out_probe_gating(spark):
 
 
 def test_text_rides_no_treatment_or_rollup_shuffle(spark):
-    """Join-back audit (the bandwidth contract in jobs/rollup_job.py): the
+    """Join-back audit (the bandwidth contract in plans/stages.py): the
     payload column `text` must appear in NO Exchange feeding the treatment
     or rollup stages — it crosses the wire exactly twice in the whole
     pipeline, both inside the `filled` stage (the payload join-back and the
     day/bucket write clustering)."""
     from pneuma_treatment_spark.io.tableio import TableIO
-    from pneuma_treatment_spark.operators.gapfill import gap_fill
     from pneuma_treatment_spark.operators.rollup import rollup_raw, with_turn_metrics
-    from pneuma_treatment_spark.operators.treatment import (
-        TreatmentConfig,
-        treat_transcripts,
-    )
+    from pneuma_treatment_spark.operators.treatment import TreatmentConfig
+    from pneuma_treatment_spark.plans.stages import build_filled, build_treated
     from pneuma_treatment_spark.synth import generate_transcripts
 
     import shutil
     import tempfile
 
+    cfg = TreatmentConfig()
     ingest = with_turn_metrics(generate_transcripts(spark, 20, seed=5, mega_turns=500))
-    narrowed = ingest.select(
-        "conv_id", "turn_idx", "role", "ts", "token_count", "is_tool_call"
-    )
-    filled = gap_fill(
-        narrowed, lerp_cols=("token_count",), lerp_ts_cols=("ts",)
-    ).join(ingest.select("conv_id", "turn_idx", "text", "tool"),
-           ["conv_id", "turn_idx"], "left")
     # the pipeline's stage boundary: treated reads `filled` back from its
     # table, so the payload join belongs to the filled stage's plan only
     wd = tempfile.mkdtemp(prefix="textaudit_")
     try:
         io = TableIO(spark, wd)
         io.write(ingest, "ingest")
-        io.write(filled, "filled")
-        treated_plan = _plan(
-            treat_transcripts(
-                io.read("filled").select(
-                    "conv_id", "turn_idx", "ts", "token_count", "is_filled"
-                ),
-                TreatmentConfig(),
-                chunked=True,
-            )
-        )
+        io.write(build_filled(ingest, cfg, chunked=True), "filled")
+        treated_plan = _plan(build_treated(io.read("filled"), cfg, chunked=True))
         rollup_plan = _plan(rollup_raw(io.read("ingest"), "1m"))
     finally:
         shutil.rmtree(wd, ignore_errors=True)
@@ -267,43 +250,32 @@ def test_treatment_fused_exchange_count(spark, transcripts_df):
     chain with precomputed flags is TWO full-frame exchanges with the tiny
     flags side broadcast — the former SQL run-merge window exchange must
     not reappear."""
-    from pneuma_treatment_spark.operators.gapfill import gap_fill
     from pneuma_treatment_spark.operators.rollup import with_turn_metrics
-    from pneuma_treatment_spark.operators.treatment import (
-        TreatmentConfig,
-        conv_anomaly_flags,
-        raw_anomaly_col,
-        treat_transcripts,
-    )
+    from pneuma_treatment_spark.operators.treatment import TreatmentConfig
+    from pneuma_treatment_spark.plans.stages import build_filled, build_treated
 
     cfg = TreatmentConfig(chunk_len=256)
-    filled = gap_fill(
-        with_turn_metrics(transcripts_df).select(
-            "conv_id", "turn_idx", "role", "ts", "token_count"
-        ),
-        lerp_cols=("token_count",),
-        lerp_ts_cols=("ts",),
-    )
-    filled.cache().count()
+    ingest = with_turn_metrics(transcripts_df)
+    # the pipeline's stage boundary: treated reads a materialized `filled`
+    filled = build_filled(ingest, cfg, chunked=False).cache()
+    filled_c = build_filled(ingest, cfg, chunked=True).cache()
+    filled.count()
+    filled_c.count()
     try:
         def above_cache(df):
             plan = df._jdf.queryExecution().executedPlan().toString()
             return plan.split("InMemoryTableScan")[0]
 
-        one = above_cache(treat_transcripts(filled, cfg))
+        one = above_cache(build_treated(filled, cfg, chunked=False))
         assert one.count("Exchange hashpartitioning") == 1, one
 
-        rawed = filled.withColumn("raw_anomaly", raw_anomaly_col(cfg))
-        two = above_cache(
-            treat_transcripts(
-                filled, cfg, chunked=True, flags=conv_anomaly_flags(rawed)
-            )
-        )
+        two = above_cache(build_treated(filled_c, cfg, chunked=True))
         # flags ride a broadcast, not a full-frame hash exchange
         assert two.count("Exchange hashpartitioning") == 2, two
         assert "BroadcastExchange" in two or "BroadcastHashJoin" in two
     finally:
         filled.unpersist()
+        filled_c.unpersist()
 
 
 def test_rollup_clustered_single_exchange_and_equality(spark):

@@ -189,27 +189,45 @@ def test_compact_guards_and_conf_restore(spark, tmp_path):
     )
 
 
-def test_surrogate_key_pipeline_equivalence(spark, workdir):
-    """surrogate_key=True (8-byte xxhash64 conv key through filled/treated
-    shuffles, string restored pre-write) must produce IDENTICAL tables to
-    the string-keyed pipeline — schema, rows, and values (text invariant
-    included)."""
-    run_pipeline(spark, workdir, **ARGS)
-    sur_dir = workdir + "_sur"
-    run_pipeline(spark, sur_dir, **ARGS, surrogate_key=True)
-
-    io_a, io_b = TableIO(spark, workdir), TableIO(spark, sur_dir)
-    for table, keys in (
-        ("filled", ["conv_id", "turn_idx"]),
-        ("treated", ["conv_id", "turn_idx"]),
-        ("rollup_1d", ["conv_id", "bucket_ts"]),
+def test_bad_shard_arguments_fail_before_any_spark_work(tmp_path):
+    """An out-of-range shard index, and sharding an input_table (which
+    only the synthesized input supports), raise ValueError before the
+    pipeline touches Spark or the workdir — spark=None proves it."""
+    wd = tmp_path / "wd"
+    for kw in (
+        dict(shard_count=0),
+        dict(shard_index=2, shard_count=2),
+        dict(shard_index=-1, shard_count=2),
+        dict(shard_index=1, shard_count=2, input_table=str(tmp_path / "raw")),
     ):
-        a = io_a.read(table).toPandas()
-        b = io_b.read(table).toPandas()
-        assert sorted(a.columns) == sorted(b.columns), table
-        cols = sorted(a.columns)
-        a = a[cols].sort_values(keys).reset_index(drop=True)
-        b = b[cols].sort_values(keys).reset_index(drop=True)
-        import pandas as pd
+        with pytest.raises(ValueError, match="shard"):
+            run_pipeline(None, str(wd), **ARGS, **kw)
+    assert not wd.exists()
 
-        pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+def test_cli_rejects_bad_arguments_before_starting_spark(monkeypatch, tmp_path):
+    """Every argument error of the job CLI exits with a usage error
+    before the (slow) Spark session starts."""
+    import sys
+
+    from jobs import rollup_job
+    from pneuma_treatment_spark import session
+
+    def no_spark(*a, **kw):
+        raise AssertionError("Spark started before argument validation")
+
+    monkeypatch.setattr(session, "get_spark", no_spark)
+    wd = str(tmp_path / "wd")
+    for bad in (
+        ["--delete-convs", "d", "--backfill-table", "b"],
+        ["--scrub-deadletter", "dl"],
+        ["--delete-convs", "d", "--shard-count", "2"],
+        ["--backfill-table", "b", "--shard-count", "2"],
+        ["--shard-count", "0"],
+        ["--shard-index", "3", "--shard-count", "2"],
+        ["--input-table", "raw", "--shard-count", "2"],
+    ):
+        monkeypatch.setattr(sys, "argv", ["rollup_job.py", "--workdir", wd, *bad])
+        with pytest.raises(SystemExit) as exc:
+            rollup_job.main()
+        assert exc.value.code == 2, bad
