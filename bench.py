@@ -37,11 +37,12 @@ Round-5 protocol fixes (VERDICT r4 items 1-2):
   reps have measured 49.5 s and 142.2 s on the SAME engine), so a slow
   bench must be attributable to the host in the artifact itself.
 
-The published amortized throughput number in BENCH/BASELINE.md still
-comes from the dedicated 6.4M-turn scaling runs:
-``python BENCH/run_scaling.py`` (pinned local[8] vs local[32]) and
-``python BENCH/run_scaling_executors.py`` (1 vs 4 separate 8-core JVMs) —
-the BASELINE.md N→4N protocol; committed runs in BENCH/.
+The published amortized throughput number in BENCH/BASELINE.md comes
+from the dedicated 6.4M-turn scaling runs (pinned local[8] vs local[32],
+and 1 vs 4 separate 8-core JVMs — the BASELINE.md N→4N protocol). Their
+harnesses are retired; the committed runs stay as evidence in
+BENCH/scaling_r0*.md and BENCH/SCALING_EXECUTORS*.json. The repo's
+benchmark is ``perfbench/`` (BENCHMARK.json).
 """
 
 from __future__ import annotations
@@ -129,7 +130,6 @@ def run_transcript_pipeline(spark, n_convs: int = 60000, seed: int = 42):
     try:
         summary = run_pipeline(
             spark, wd, n_convs=n_convs, seed=seed, mega_turns=100000, chunked=True,
-            stats="fast",
         )
         return summary["stages"]["ingest"]["rows"]
     finally:

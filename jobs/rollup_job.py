@@ -77,7 +77,6 @@ def run_pipeline(
     ttl_now: str | None = None,
     stop_after: str | None = None,
     n_buckets: int = 8,
-    stats: str = "full",
     shard_index: int = 0,
     shard_count: int = 1,
     stage_hook=None,
@@ -90,8 +89,8 @@ def run_pipeline(
     ``shard_count`` synthesizes its slice of the ``n_convs`` conversations;
     see :func:`check_shards`). ``stop_after``: stage name to halt
     after (used by the resume test to simulate a mid-job kill).
-    ``stage_hook(name)``: called after each stage completes — the seam the
-    bytes-per-stage instrumentation (BENCH/run_bytes.py) snapshots on.
+    ``stage_hook(name)``: called after each stage completes — the seam
+    ``perfbench``'s traced run (``--trace 1``) times its stage spans on.
     What each derived table contains is defined in ``plans/stages.py``.
     """
     check_shards(shard_index, shard_count, input_table)
@@ -100,7 +99,6 @@ def run_pipeline(
     io = TableIO(spark, workdir, n_buckets=n_buckets)
     runner = PipelineRunner(
         io,
-        stats=stats,
         config={
             "n_convs": n_convs,
             "seed": seed,
@@ -130,8 +128,13 @@ def run_pipeline(
     )
 
     order = []
+    failures = []  # branch failures, in the order they happened
 
     def stage(name, build, **kw):
+        if failures:
+            # the sibling branch failed: start no new stage (this raise is
+            # recorded after the sibling's, so the first failure still wins)
+            raise _StopPipeline(name)
         order.append(name)
         df = runner.run_stage(name, build, ts_col=TABLE_TS[name], **kw)
         if stage_hook is not None:
@@ -211,19 +214,29 @@ def run_pipeline(
         # deterministic: each branch reads only _sigs of its own deps.
         # Sequential fallbacks keep the two instrumented contracts intact:
         # stop_after must halt BEFORE later stages ever run
-        # (tests/test_resume.py pins the stage set), and a stage_hook
-        # consumer (BENCH/run_bytes.py) attributes per-stage bytes, which
+        # (tests/test_resume.py pins the stage set), and the stage_hook
+        # consumer (perfbench's traced run) times per-stage spans, which
         # overlapping stages would smear.
         if stop_after is None and stage_hook is None:
-            from concurrent.futures import ThreadPoolExecutor
+            from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
+
+            def branch(run):
+                try:
+                    run()
+                except BaseException as e:
+                    failures.append(e)
+                    raise
 
             with ThreadPoolExecutor(max_workers=2) as pool:
-                f_treat = pool.submit(run_treatment_branch)
-                f_roll = pool.submit(run_rollup_branch)
-                # surface the FIRST branch failure even if the other also
-                # raised; .result() re-raises inside the caller's context
-                f_roll.result()
-                f_treat.result()
+                futures = [
+                    pool.submit(branch, run_treatment_branch),
+                    pool.submit(branch, run_rollup_branch),
+                ]
+                wait(futures, return_when=FIRST_EXCEPTION)
+                # the first failure wins; leaving the pool still joins the
+                # sibling, which stops at its next stage boundary
+                if failures:
+                    raise failures[0]
         else:
             run_treatment_branch()
             run_rollup_branch()
@@ -277,7 +290,6 @@ def main() -> None:
         "with no --buckets ADOPTS the count recorded in the table manifests, "
         "and an explicit contradicting value is a loud error)",
     )
-    ap.add_argument("--stats", default="full", choices=["full", "fast"])
     ap.add_argument("--shard-index", type=int, default=0)
     ap.add_argument("--shard-count", type=int, default=1)
     ap.add_argument(
@@ -370,7 +382,6 @@ def main() -> None:
         input_table=args.input_table,
         ttl_now=args.ttl_now,
         n_buckets=args.buckets if args.buckets is not None else 8,
-        stats=args.stats,
         shard_index=args.shard_index,
         shard_count=args.shard_count,
     )

@@ -56,16 +56,16 @@ def parse_wide_meta(
     A record needs only its 4 meta fields here — the reference emits the
     meta row even for a trajectory with zero complete 6-tuples, so the
     fact parser's ≥10-token floor does NOT apply."""
-    # No token-count pre-filter: element_at past the end is null (ANSI off)
-    # and the null checks below drop exactly the same short lines, so the
-    # split runs ONCE per line (a WHERE on size(toks) is pushed below the
-    # projection and re-evaluates the split per line).
+    # No token-count pre-filter: F.get past the end is null under any ANSI
+    # setting and the null checks below drop exactly the same short lines,
+    # so the split runs ONCE per line (a WHERE on size(toks) is pushed below
+    # the projection and re-evaluates the split per line).
     toks = _tokens(value_col, sep)
     out = lines.select(
-        toks[0].alias("id"),
-        toks[1].alias("type"),
-        toks[2].try_cast("double").alias("dist"),
-        toks[3].try_cast("double").alias("avg_speed"),
+        F.get(toks, 0).alias("id"),
+        F.get(toks, 1).alias("type"),
+        F.get(toks, 2).try_cast("double").alias("dist"),
+        F.get(toks, 3).try_cast("double").alias("avg_speed"),
     )
     return out.where(F.col("dist").isNotNull() & F.col("avg_speed").isNotNull())
 

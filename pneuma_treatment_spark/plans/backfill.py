@@ -177,7 +177,7 @@ def merge_conv_scoped(
     # the driver — bounded metadata, the same thing Iceberg's planner holds.
     # The removed/added row counts ride the same two jobs as the partition
     # discovery (the ops wall is dominated by fixed per-job overhead at
-    # small deltas — BENCH/run_backfill.py measures it).
+    # small deltas — perfbench's traced run measures it as backfill.*).
     old_parts = old_aff.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
     new_parts = nr.groupBy(*pcols).agg(F.count(F.lit(1)).alias("__n")).collect()
     removed = sum(r["__n"] for r in old_parts)

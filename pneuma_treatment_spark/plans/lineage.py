@@ -41,14 +41,9 @@ class StageResult:
 
 
 class PipelineRunner:
-    def __init__(self, io: TableIO, config: dict | None = None, stats: str = "full"):
-        # stats: "full" collects per-partition row counts into the manifest
-        # (the lineage contract); "fast" records total rows only (parquet
-        # footer metadata count — used by throughput benches where the extra
-        # per-stage count job is measurable overhead).
+    def __init__(self, io: TableIO, config: dict | None = None):
         self.io = io
         self.config = config or {}
-        self.stats = stats
         self.manifest_dir = Path(io.root) / "_manifest"
         self.manifest_dir.mkdir(parents=True, exist_ok=True)
         self._sigs: dict[str, str] = {}
@@ -120,7 +115,7 @@ class PipelineRunner:
         rows = int(obs.get["rows"])
         out = self.io.read(name)
         n_parts = 0
-        if self.stats == "full" and partitioned and "p_day" in out.columns:
+        if partitioned and "p_day" in out.columns:
             # Per-partition lineage counts are a TABLE, not driver state: at
             # 10^12 turns x years of days a per-stage python dict of counts
             # is a driver-side list per write. The counts DataFrame writes
@@ -177,8 +172,8 @@ def verify_partition_lineage(io: TableIO, name: str) -> bool:
     m = json.loads((Path(io.root) / "_manifest" / f"{name}.json").read_text())
     ppath = Path(io.root) / "_manifest" / f"{name}_partitions"
     if not ppath.exists():
-        # stats="fast" runs (bench) and pre-table-format manifests have no
-        # partitions table — that is a failed integrity check, not a crash
+        # a stage whose counts table was never written (or was removed) has
+        # no lineage to verify — that is a failed integrity check, not a crash
         return False
     stored = io.spark.read.parquet(str(ppath))
     actual = partition_counts(io.read(name))

@@ -50,10 +50,33 @@ def test_resume_skips_completed_stages(spark, workdir):
 
 
 def test_partition_lineage_manifest(spark, workdir):
-    run_pipeline(spark, workdir, **ARGS)
+    summary = run_pipeline(spark, workdir, **ARGS)
     io = TableIO(spark, workdir)
-    for stage in ("ingest", "filled", "rollup_1m", "rollup_1h", "rollup_1d"):
+    assert len(summary["order"]) == 7
+    for stage in summary["order"]:
         assert verify_partition_lineage(io, stage), stage
+
+
+def test_first_branch_failure_wins(spark, workdir, monkeypatch):
+    """When both overlapped branches fail, the failure that happened first
+    is the one raised, and the surviving branch starts no further stage:
+    the treatment branch fails at once, so the rollup branch stops at its
+    next stage boundary and never writes chunks."""
+    from pathlib import Path
+
+    from jobs import rollup_job
+
+    def treatment_fails(*a, **kw):
+        raise RuntimeError("treatment branch failed")
+
+    def rollup_fails(*a, **kw):
+        raise RuntimeError("rollup branch failed")
+
+    monkeypatch.setattr(rollup_job, "build_filled", treatment_fails)
+    monkeypatch.setattr(rollup_job, "rollup_from_tier", rollup_fails)
+    with pytest.raises(RuntimeError, match="treatment branch failed"):
+        run_pipeline(spark, workdir, **ARGS)
+    assert not (Path(workdir) / "_manifest" / "chunks.json").exists()
 
 
 def test_config_change_invalidates_downstream(spark, workdir):
@@ -65,7 +88,7 @@ def test_config_change_invalidates_downstream(spark, workdir):
 def test_lineage_detects_tampered_table(spark, workdir):
     """The distributed recount must FAIL (cleanly, not crash) when a
     stage's data no longer matches its recorded per-partition counts, and
-    when the counts table is absent (stats='fast' workdirs)."""
+    when the counts table is absent (removed, or never written)."""
     import shutil as _sh
     from pathlib import Path
 
@@ -77,7 +100,7 @@ def test_lineage_detects_tampered_table(spark, workdir):
     victim = sorted(p for p in table_dir.iterdir() if p.name.startswith("p_day="))[0]
     _sh.rmtree(victim)
     assert verify_partition_lineage(io, "rollup_1d") is False
-    # missing counts table (fast-stats manifests) -> clean False
+    # missing counts table -> clean False
     _sh.rmtree(Path(io.root) / "_manifest" / "ingest_partitions")
     assert verify_partition_lineage(io, "ingest") is False
 

@@ -56,10 +56,20 @@ def test_permissive_keeps_null_rows(spark):
 
 
 def test_meta_extraction(spark):
-    out = {r["id"]: r for r in parse_wide_meta(_lines(spark, [LINE_A, LINE_B, HEADER])).collect()}
-    assert out["veh1"]["type"] == "Car" and out["veh1"]["dist"] == 120.5
-    assert out["veh2"]["avg_speed"] == 28.0
-    assert len(out) == 2  # header dropped: dist/avg_speed not numeric
+    # header dropped (dist/avg_speed not numeric), short line dropped (no
+    # meta fields past the second) — with ANSI off and on alike
+    rows = [LINE_A, LINE_B, HEADER, "short; line"]
+    key = "spark.sql.ansi.enabled"
+    before = spark.conf.get(key)
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set(key, ansi)
+            out = {r["id"]: r for r in parse_wide_meta(_lines(spark, rows)).collect()}
+            assert out["veh1"]["type"] == "Car" and out["veh1"]["dist"] == 120.5
+            assert out["veh2"]["avg_speed"] == 28.0
+            assert len(out) == 2, ansi
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_read_wide_text_end_to_end(spark, tmp_path):
